@@ -62,24 +62,8 @@ object Bench {
     val loadBefore = loadavg()
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // suite-sized codegen class cache (see GraftSession): the default
-      // 100-entry LRU evicts every compiled stage before a 244-query
-      // pass cycles back, so min-of-3 was timing Janino recompilation,
-      // not the steady-state plan this bench documents itself as
-      // measuring. Scale-independent: the cache is keyed on generated
-      // source, not data.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // warm-up: touch every table and exercise codegen once
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",

@@ -2,16 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — the one place a SparkSession
+  * is built, so every main, test and harness runs the same policy.
   *
   * Tuned for the harness's local[N] runs but with settings that carry
   * to a real cluster: AQE (runtime re-plan + skew-join splitting),
   * explicit shuffle parallelism, UTC session time so results agree
   * with the DuckDB oracle bit-for-bit on timestamps.
+  *
+  * `cores` defaults to SPARK_GRAFT_CPUS, else the host's processor
+  * count. `conf` entries are applied last and override the defaults
+  * (PlanAudit turns AQE off; MicroBench routes its GRAFT_CONF pairs).
   */
 object GraftSession {
-  def apply(appName: String = "graft", cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def apply(appName: String = "graft", cores: Int = defaultCores,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .appName(appName)
@@ -32,6 +42,7 @@ object GraftSession {
       // The right trade for any repeated-workload deployment.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic repeat-timer: alternates the named queries for N rounds
   * at sf0.1 so plan-level regressions separate from host-load noise
   * (min-of-two in Bench is not enough when the host swings by seconds).
-  * `sbt "runMain graft.MicroBench [rounds] [query...]"` — defaults to
+  * `sbt "runMain graft.MicroBench [rounds] [ALL | query ...]"` — defaults to
   * the entity_match/match_certitude twin pair from the r04 anomaly. */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -14,29 +13,23 @@ object MicroBench {
     val rest = if (args.headOption.exists(_.toIntOption.isDefined)) args.drop(1) else args
     // "ALL" = one alternating pass over every registered query — the
     // shape used to gauge the suite-sized codegen cache's metaspace
-    // footprint (printed after each round)
-    val names = if (rest.toSeq == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted
-      else if (rest.nonEmpty) rest.toSeq
-      else Seq("entity_match", "match_certitude")
+    // footprint (printed after each round); it expands in place, so
+    // `ALL extra` times every query plus `extra`
+    val names = (if (rest.nonEmpty) rest.toSeq else Seq("entity_match", "match_certitude"))
+      .flatMap(n => if (n == "ALL") SparkEntry.queries.keys.toSeq.sorted else Seq(n))
+    names.find(n => !SparkEntry.queries.contains(n)).foreach { n =>
+      System.err.println(s"unknown query '$n'; usage: " +
+        "runMain graft.MicroBench [rounds] [ALL | query ...]")
+      sys.exit(2)
+    }
     // GRAFT_CONF="k=v;k=v" passes extra SparkConf pairs for config A/B
     // experiments (core settings like spark.shuffle.compress must be set
-    // before context creation, so a builder hook is the only way in).
+    // before context creation, so they go in as session overrides).
     val extra = sys.env.getOrElse("GRAFT_CONF", "").split(";").toSeq
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      }.toMap
+    val spark = GraftSession("graft-microbench", conf = extra)
     // job counter: a multi-job operator pays Spark's ~0.3-0.5s/job
     // local floor regardless of data volume — the diagnostic that
     // separates "slow plan" from "many tiny jobs" on the small-sf rows

@@ -69,7 +69,11 @@ object Dedup {
     * the two xxhash64 draws are genuinely independent.) One shuffle each: frequency agg, per-doc rank, prefix
     * self-join (bare ids through the distinct), then the two payload
     * rejoins for the O(n+m) sorted-jaccard verify; an implied
-    * size-ratio prune (min ≥ max/2) runs before it. */
+    * size-ratio prune (min ≥ max/2) runs before it.
+    *
+    * Not fully lazy: building the DataFrame runs one Spark job, the
+    * clone-ratio probe that picks the verify route (see
+    * [[ngramPairsOver]]). */
   def dedupNgram(spark: SparkSession, sfDir: String): DataFrame =
     ngramPairsOver(Tables.documents(spark, sfDir))
 
@@ -149,10 +153,7 @@ object Dedup {
     // keyed pairs; the size-ratio prune runs BEFORE the distinct so the
     // pair-dedup exchange only carries survivors. distinct over
     // (doc_a, doc_b, sk_a, sk_b) equals distinct over (doc_a, doc_b):
-    // sk is a function of the doc id. Persisted: feeds BOTH the
-    // distinct-content-pair
-    // build and the final fan-back join — without the pin the whole
-    // prefix self-join + distinct subtree would execute twice.
+    // sk is a function of the doc id.
     val keyed = pfx
       .select(col("doc_id").as("doc_a"), col("lang"), col("h"),
         col("n").as("n_a"), col("sk").as("sk_a"))
@@ -163,7 +164,6 @@ object Dedup {
         least(col("n_a"), col("n_b")) * 2 >= greatest(col("n_a"), col("n_b")))
       .select(col("doc_a"), col("doc_b"), col("sk_a"), col("sk_b"))
       .distinct()
-      .persist()
     // ADAPTIVE VERIFY (the r14 regression fix): the distinct-content
     // rep path pays a corpus-array dropDuplicates(sk) shuffle, a pair
     // distinct, and a fan-back join — a trade that only wins when
@@ -183,6 +183,11 @@ object Dedup {
         CloneRepVerifyRatio
     }
     if (useRep) {
+      // keyed feeds BOTH the distinct-content-pair build and the final
+      // fan-back join — without the pin the whole prefix self-join +
+      // distinct subtree would execute twice. (The per-pair route reads
+      // it once, so pinning it there would only hold memory.)
+      keyed.persist()
       // exact Jaccard once per distinct content pair, on representative arrays
       val reps = base.select(col("sk"), col("sh")).dropDuplicates("sk")
       val verified = keyed.select(col("sk_a"), col("sk_b")).distinct()

@@ -22,7 +22,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   /** The events table's `ts` physical type has varied across harness
     * data generations — TIMESTAMP(NANOS) (read as raw longs via
-    * spark.sql.legacy.parquet.nanosAsLong, set in GraftSession),
+    * spark.sql.legacy.parquet.nanosAsLong, which only the GraftSession
+    * factory sets),
     * micros with isAdjustedToUTC=false (read as TIMESTAMP_NTZ), or a
     * true UTC-adjusted timestamp. Normalize all three to session-tz
     * TimestampType so every consumer (unix_micros arithmetic, window
